@@ -171,21 +171,6 @@ def linestring_wkb_expr(coords: Column, srid: Column) -> Column:
     return _linestring_wkb_xy_udf(xs, ys, srid)
 
 
-@pandas_udf(BinaryType())
-def polygon_wkb_udf(coords: pd.Series, srid: pd.Series) -> pd.Series:
-    """Single-ring polygon from a closed coord array (way polygons)."""
-    out = []
-    for arr, s in zip(coords, srid):
-        if arr is None or len(arr) < 4:
-            out.append(None)
-        else:
-            ring = [(c["x"], c["y"]) for c in arr]
-            if ring[0] != ring[-1]:
-                ring.append(ring[0])
-            out.append(wkblib.polygon_wkb([ring], int(s)))
-    return pd.Series(out, dtype=object)
-
-
 _WKB_AREA_STRUCT = StructType(
     [StructField("wkb", BinaryType()), StructField("area", DoubleType())]
 )

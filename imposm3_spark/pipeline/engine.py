@@ -12,10 +12,8 @@ PostGIS payload.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from imposm3_spark import elements
@@ -157,14 +155,6 @@ def _assemble_multipolygons(max_ring_gap: float, srid: int, limiter=None):
         )
 
     return assemble
-
-
-@dataclass
-class PipelineOutput:
-    tables: dict[str, DataFrame]
-
-    def union_all(self) -> dict[str, DataFrame]:
-        return self.tables
 
 
 class ImportPipeline:
@@ -849,6 +839,15 @@ class ImportPipeline:
     def run(
         self, nodes: DataFrame, ways: DataFrame, relations: DataFrame
     ) -> dict[str, DataFrame]:
+        """All mapped tables, by name, as lazy frames.
+
+        Every phase reads its inputs again: ``nodes`` feeds the coordinate
+        pin, the point tables and the relation members, ``ways`` and
+        ``relations`` feed several joins, and AQE runs some of those joins
+        while the frames are built. So each input is scanned many times
+        per import; pass sources that are cheap to re-scan (parquet,
+        ``read_osm_xml``'s driver-side rows, ``read_pbf``'s pinned decode)
+        or pin them first."""
         coords = self._pin(self.prepare_coords(nodes))
         tables: dict[str, list[DataFrame]] = {}
         for part in (
@@ -867,14 +866,3 @@ def _union_all(dfs: list[DataFrame]) -> DataFrame:
     for df in dfs[1:]:
         out = out.unionByName(df)
     return out
-
-
-def read_osm_tables(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Read nodes/ways/relations parquet produced by sources.osm_xml."""
-    return (
-        spark.read.parquet(f"{path}/nodes.parquet"),
-        spark.read.parquet(f"{path}/ways.parquet"),
-        spark.read.parquet(f"{path}/relations.parquet"),
-    )

@@ -26,6 +26,8 @@ from pathlib import Path
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from imposm3_spark.sources.osm_xml import NODE_SCHEMA, RELATION_SCHEMA, WAY_SCHEMA
 
@@ -48,6 +50,12 @@ def read_varint(buf: bytes, pos: int) -> tuple[int, int]:
 
 def zigzag(n: int) -> int:
     return (n >> 1) ^ -(n & 1)
+
+
+def int64(n: int) -> int:
+    """A varint read as protobuf ``int64``: negative values arrive as
+    their 64-bit two's complement."""
+    return n - (1 << 64) if n >> 63 else n
 
 
 def iter_fields(buf: bytes) -> Iterator[tuple[int, int, bytes | int]]:
@@ -157,6 +165,10 @@ def enc_varint(n: int) -> bytes:
 
 def enc_zigzag(n: int) -> int:
     return (n << 1) ^ (n >> 63) if n < 0 else n << 1
+
+
+# int64 fields (Way/Relation ids) encode negatives as 64-bit two's complement
+_U64 = (1 << 64) - 1
 
 
 def enc_field(field: int, wt: int, payload: bytes | int) -> bytes:
@@ -302,7 +314,7 @@ def _decode_way(buf: bytes, st: list[str], date_gran: int = 1000):
     meta = None
     for f, _wt, v in iter_fields(buf):
         if f == 1:
-            wid = v
+            wid = int64(v)
         elif f == 2:
             keys = packed_varints(v)
         elif f == 3:
@@ -324,7 +336,7 @@ def _decode_relation(buf: bytes, st: list[str], date_gran: int = 1000):
     meta = None
     for f, _wt, v in iter_fields(buf):
         if f == 1:
-            rid = v
+            rid = int64(v)
         elif f == 2:
             keys = packed_varints(v)
         elif f == 3:
@@ -371,7 +383,7 @@ def decode_primitive_block(buf: bytes):
                 meta = None
                 for ff, _w, vv in iter_fields(v):
                     if ff == 1:
-                        nid = vv
+                        nid = zigzag(vv)  # sint64, unlike Way/Relation ids
                     elif ff == 2:
                         tags_k = packed_varints(vv)
                     elif ff == 3:
@@ -439,10 +451,42 @@ def scan_blobs(path: str) -> list[tuple[str, int, int]]:
     return out
 
 
+# read_pbf's single decode output: one row per element, named by ``kind``,
+# with the union of the three element schemas' columns. Flat rather than one
+# struct per kind: a field selected out of a nullable struct reads nullable,
+# flat columns keep each schema's non-null flags. Another kind's ``refs`` /
+# ``members`` hold an empty array, as those columns are non-nullable.
+ELEMENT_SCHEMA = T.StructType(
+    [
+        T.StructField("kind", T.StringType(), False),
+        *NODE_SCHEMA.fields,
+        WAY_SCHEMA["refs"],
+        RELATION_SCHEMA["members"],
+    ]
+)
+
+
 def read_pbf(
     spark: SparkSession, path: str, mapping=None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Distributed PBF read: one decode task per OSMData blob.
+
+    Each blob is decoded exactly once per call, however many actions reach
+    the returned frames (reference parity: one parse fans elements out to
+    the node/way/relation caches, reader/reader.go:53-273). The decode
+    emits one kind-tagged frame (``ELEMENT_SCHEMA``), pinned with a lazy
+    local checkpoint: the first action decodes every blob and stores the
+    rows on the executors, and nodes, ways and relations are ``kind``
+    projections of that pin, with NODE_SCHEMA / WAY_SCHEMA /
+    RELATION_SCHEMA. Unpinned, every action would re-run the pure-Python
+    decode, and an import fires dozens of actions. The pin's blocks are
+    freed when the frames are garbage-collected, unlike a ``cache()``
+    entry, which stays until an explicit unpersist.
+
+    Trade: the pin is not fault tolerant. Its blocks live only on the
+    executors that decoded them, so losing one fails the job that reads
+    them instead of re-decoding the lost blobs, and the pin is unsafe with
+    dynamic allocation.
 
     With ``mapping``, the mapping-derived tag prefilter is PUSHED INTO the
     decode task (reference parity: the reader applies mapping/filter.go
@@ -497,24 +541,23 @@ def read_pbf(
                 fh.seek(off)
                 block = _decompress_blob(fh.read(size))
                 nodes, ways, rels = decode_primitive_block(block)
-                if nf is not None:
-                    nodes = [
-                        (i, lon, lat, nf(t) if t else t, m)
-                        for i, lon, lat, t, m in nodes
-                    ]
-                    ways = [(i, refs, wf(t) if t else t, m) for i, refs, t, m in ways]
-                    rels = [(i, mem, rf(t) if t else t, m) for i, mem, t, m in rels]
-                yield nodes, ways, rels
+                for i, lon, lat, t, m in nodes:
+                    yield ("node", i, lon, lat, nf(t) if nf and t else t, m, [], [])
+                for i, refs, t, m in ways:
+                    yield ("way", i, None, None, wf(t) if wf and t else t, m, refs, [])
+                for i, mem, t, m in rels:
+                    yield ("relation", i, None, None, rf(t) if rf and t else t, m, [], mem)
 
-    decoded = blobs_rdd.mapPartitions(decode_partition)
-
-    nodes_rdd = decoded.flatMap(lambda t: t[0])
-    ways_rdd = decoded.flatMap(lambda t: t[1])
-    rels_rdd = decoded.flatMap(lambda t: t[2])
-    return (
-        spark.createDataFrame(nodes_rdd, NODE_SCHEMA),
-        spark.createDataFrame(ways_rdd, WAY_SCHEMA),
-        spark.createDataFrame(rels_rdd, RELATION_SCHEMA),
+    elements = spark.createDataFrame(
+        blobs_rdd.mapPartitions(decode_partition), ELEMENT_SCHEMA
+    ).localCheckpoint(eager=False)
+    return tuple(  # type: ignore[return-value]
+        elements.filter(F.col("kind") == kind).select(*schema.names)
+        for kind, schema in (
+            ("node", NODE_SCHEMA),
+            ("way", WAY_SCHEMA),
+            ("relation", RELATION_SCHEMA),
+        )
     )
 
 
@@ -650,7 +693,7 @@ def write_pbf(
         msgs = []
         for row, meta in zip(batch, metas):
             wid, refs, tags = row[:3]
-            body = enc_field(1, 0, wid)
+            body = enc_field(1, 0, wid & _U64)
             if tags:
                 body += enc_packed(2, [intern[k] for k in tags])
                 body += enc_packed(3, [intern[v] for v in tags.values()])
@@ -674,7 +717,7 @@ def write_pbf(
         msgs = []
         for row, meta in zip(batch, metas):
             rid, members, tags = row[:3]
-            body = enc_field(1, 0, rid)
+            body = enc_field(1, 0, rid & _U64)
             if tags:
                 body += enc_packed(2, [intern[k] for k in tags])
                 body += enc_packed(3, [intern[v] for v in tags.values()])
