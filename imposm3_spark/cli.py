@@ -225,15 +225,10 @@ def cmd_diff(args, files: list[str]) -> int:
     tables = {n: spark.read.parquet(str(Path(out) / n)) for n in table_names}
 
     for f in files:
-        changes = read_osc_xml(spark, f)
-        state, tables = apply_batch(pipe, state, tables, changes)
-        # materialize before the swap: the new plans read the old files
-        tables = {n: df.localCheckpoint() for n, df in tables.items()}
-        state = type(state)(
-            state.nodes.localCheckpoint(),
-            state.ways.localCheckpoint(),
-            state.relations.localCheckpoint(),
-        )
+        # apply_batch returns pinned frames, so the swap below may
+        # overwrite the files the previous plans read
+        batch = apply_batch(pipe, state, tables, read_osc_xml(spark, f))
+        state, tables = batch.state, batch.tables
         print(f"applied {f}")
 
     for name, df in tables.items():

@@ -6,7 +6,7 @@ rebuilding its ways/relations (cache/diff.go:18-24):
   node -> relations (CoordsRelRefIndex)
   way  -> relations (WaysRefIndex)
 
-In Spark these are plain normalized pair DataFrames derived from the element
+In Spark these are (referenced id, owner id) pairs derived from the element
 state by explode — no point lookups, dependency resolution becomes semi
 joins against the changed-id set. At scale they'd be persisted (Delta /
 bucketed parquet keyed by the referenced id) and maintained incrementally;
@@ -20,36 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def node_way_refs(ways: DataFrame) -> DataFrame:
-    """(node_id, way_id) for every ref of every way."""
-    return ways.select(
-        F.explode("refs").alias("node_id"), F.col("id").alias("way_id")
-    ).distinct()
-
-
-def node_rel_refs(relations: DataFrame) -> DataFrame:
-    """(node_id, rel_id) for node members (type 0)."""
-    return (
-        relations.select(F.col("id").alias("rel_id"), F.explode("members").alias("m"))
-        .filter(F.col("m.type") == 0)
-        .select(F.col("m.id").alias("node_id"), "rel_id")
-        .distinct()
-    )
-
-
-def way_rel_refs(relations: DataFrame) -> DataFrame:
-    """(way_id, rel_id) for way members (type 1)."""
-    return (
-        relations.select(F.col("id").alias("rel_id"), F.explode("members").alias("m"))
-        .filter(F.col("m.type") == 1)
-        .select(F.col("m.id").alias("way_id"), "rel_id")
-        .distinct()
-    )
-
-
-def dependent_ways(
-    ways: DataFrame, changed_node_ids: DataFrame, hint: bool = True
-) -> DataFrame:
+def dependent_ways(ways: DataFrame, changed_node_ids: DataFrame) -> DataFrame:
     """way ids referencing any changed node (J8). changed_node_ids: (id).
 
     Explodes refs WITHOUT the pair-level distinct: the semi join keeps at
@@ -57,16 +28,11 @@ def dependent_ways(
     way ids dedupes — pre-deduping the full pair table would add a
     shuffle of the biggest intermediate for nothing."""
     refs = ways.select(F.explode("refs").alias("node_id"), F.col("id").alias("way_id"))
-    # broadcast (hint=True, the blast-radius default): the changed set is
-    # diff-batch bounded but arrives as a checkpointed RDD scan with NO
-    # size statistics — unhinted, the planner sort-merge-joins, shuffling
-    # the exploded ref index (the biggest intermediate in the frontier
-    # walk) once per call. hint=False (round-10 ADVICE: batch size is
-    # input-controlled) lets a catch-up batch degrade to that sort-merge
-    # gracefully instead of forcing an over-limit broadcast.
-    side = changed_node_ids.withColumnRenamed("id", "node_id")
-    if hint:
-        side = F.broadcast(side)
+    # broadcast: the changed set is diff-batch bounded but arrives as a
+    # checkpointed RDD scan with NO size statistics — unhinted, the planner
+    # sort-merge-joins, shuffling the exploded ref index (the biggest
+    # intermediate in the frontier walk) once per call
+    side = F.broadcast(changed_node_ids.withColumnRenamed("id", "node_id"))
     return (
         refs.join(side, "node_id", "leftsemi")
         .select(F.col("way_id").alias("id"))
@@ -78,11 +44,9 @@ def dependent_relations(
     relations: DataFrame,
     changed_node_ids: DataFrame | None = None,
     changed_way_ids: DataFrame | None = None,
-    hint: bool = True,
 ) -> DataFrame:
-    """relation ids referencing any changed node or way. hint as in
-    dependent_ways (count-gated by the replication runner)."""
-    maybe_bcast = (lambda d: F.broadcast(d)) if hint else (lambda d: d)
+    """relation ids referencing any changed node or way; the changed sides
+    broadcast as in dependent_ways."""
     outs = []
     members = relations.select(
         F.col("id").alias("rel_id"), F.explode("members").alias("m")
@@ -93,7 +57,7 @@ def dependent_relations(
         )
         outs.append(
             nr.join(
-                maybe_bcast(changed_node_ids.withColumnRenamed("id", "node_id")),
+                F.broadcast(changed_node_ids.withColumnRenamed("id", "node_id")),
                 "node_id",
                 "leftsemi",
             ).select(F.col("rel_id").alias("id"))
@@ -104,7 +68,7 @@ def dependent_relations(
         )
         outs.append(
             wr.join(
-                maybe_bcast(changed_way_ids.withColumnRenamed("id", "way_id")),
+                F.broadcast(changed_way_ids.withColumnRenamed("id", "way_id")),
                 "way_id",
                 "leftsemi",
             ).select(F.col("rel_id").alias("id"))

@@ -8,8 +8,9 @@ Spark shape: a driver-side micro-batch loop (the reference has no
 watermarks/event-time either — every change applies, last-write-wins per
 id). Each batch is `apply_batch` (pure DataFrame algebra) + an atomic state
 write, i.e. foreachBatch semantics with a file checkpoint. The element
-state and output tables are persisted per batch and the previous versions
-unpersisted — bounded memory, restart picks up from last.state.txt.
+state and output tables are local checkpoints pinned by each batch; the
+previous versions are dropped, so their blocks are freed once garbage
+collected — bounded memory, restart picks up from last.state.txt.
 
 Sequence files follow the osmosis layout the reference consumes:
   <dir>/NNN/NNN/NNN.osc.gz  (or flat <dir>/<seq>.osc[.gz])
@@ -19,20 +20,13 @@ with a sibling .state.txt; we accept both layouts.
 from __future__ import annotations
 
 import gc
-import os
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from imposm3_spark.diff.update import (
-    OsmState,
-    apply_batch,
-    apply_changes_to_state,
-    compute_frontier,
-)
+from imposm3_spark.diff.update import OsmState, apply_batch
 from imposm3_spark.pipeline.engine import ImportPipeline
 from imposm3_spark.sources.osm_xml import read_osc_xml
 
@@ -109,134 +103,28 @@ class ReplicationRunner:
         if path is None:
             return False
         # Stage walls for observability (imposm3_spark/benchdiff.py reads
-        # them): each key marks where the LAZY batch plan actually
-        # executes — expire at tiles.collect(), state/tables/gens at their
-        # localCheckpoints, store at the durable save.
-        stage_secs: dict[str, float] = {}
+        # them): "read" here, the batch stages from apply_batch, "store" at
+        # the durable save.
         t0 = time.perf_counter()
         changes = read_osc_xml(self.spark, path)
-        stage_secs["read"] = round(time.perf_counter() - t0, 3)
-
-        # Pin the upserted state and the frontier FIRST: every downstream
-        # consumer (rebuild semi-joins, delete anti-joins, expiry branches,
-        # gen refresh) references them several times, and Spark re-executes
-        # an unpinned subtree once per referencing branch. Pinning here
-        # (tiny jobs — state upsert is an anti-join+union over the already-
-        # checkpointed previous state; the frontier is the batch's blast
-        # radius) turned round-10 benchdiff's per-batch wall from ~190 s
-        # to single-digit seconds at 32 Monaco replicas. The previous
-        # ordering checkpointed state AFTER expiry, so expiry's six
-        # branches each re-ran the upsert joins, and the frontier was
-        # computed twice (once inside apply_batch, once for expiry).
-        t0 = time.perf_counter()
-        new_state = apply_changes_to_state(self.state, changes)
-        # the three state pins are independent — submit them concurrently
-        # (each is a small job; serial submission pays three scheduler
-        # round-trips where one suffices on an idle cluster)
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            n_f, w_f, r_f = (
-                pool.submit(new_state.nodes.localCheckpoint),
-                pool.submit(new_state.ways.localCheckpoint),
-                pool.submit(new_state.relations.localCheckpoint),
-            )
-            new_state = OsmState(n_f.result(), w_f.result(), r_f.result())
-        stage_secs["state"] = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        frontier = compute_frontier(self.state, new_state, changes, pin=True)
-        # Broadcast-hint gate (round-10 ADVICE): the frontier-side hints
-        # assume a blast-radius-bounded batch, but batch size is
-        # input-controlled (catch-up replication, mass edits). Normal
-        # batches pay NOTHING here (changes is a driver-side LocalRelation
-        # — count() is no job); a catch-up-sized batch pays three tiny
-        # count jobs on the pinned frontier frames and, if any side could
-        # exceed the broadcastable bound, drops every hint so the joins
-        # degrade to sort-merge instead of OOMing the driver. Residual
-        # (documented): a pathological fan-out from FEW changes is not
-        # gated — it is bounded by the state's max ways-per-node fan-in.
-        hint = True
-        if changes.count() > int(os.environ.get("SPARK_GRAFT_DIFF_GATE", "100000")):
-            limit = int(os.environ.get("SPARK_GRAFT_DIFF_BROADCAST_LIMIT", "4000000"))
-            hint = all(
-                df.count() <= limit
-                for df in (frontier.node_ids, frontier.way_ids, frontier.rel_ids)
-            )
-        stage_secs["frontier"] = round(time.perf_counter() - t0, 3)
-
-        t0 = time.perf_counter()
-        _, new_tables, affected = apply_batch(
+        stage_secs = {"read": round(time.perf_counter() - t0, 3)}
+        batch = apply_batch(
             self.pipe,
             self.state,
             self.tables,
             changes,
-            with_affected=True,
-            new_state=new_state,
-            frontier=frontier,
-            hint=hint,
+            gens=self.gens,
+            expire_dir=self.expire_dir,
+            expire_zoom=self.expire_zoom,
         )
-        # plan construction + the engine's shared-frontier pins (the
-        # rebuilt rows themselves materialize under "tables")
-        stage_secs["rebuild"] = round(time.perf_counter() - t0, 3)
-        expire_future = None
-        expire_pool = None
-        try:
-            if self.expire_dir is not None:
-                # expiry depends only on (state, new_state, frontier) — all
-                # pinned above — so it runs CONCURRENTLY with the table pins
-                # below (guide §2.6); its wall is still recorded separately.
-                def _expire() -> float:
-                    from imposm3_spark.diff.update import expired_tiles_for_batch
-                    from imposm3_spark.expire.tiles import TileExpireList
-
-                    t0 = time.perf_counter()
-                    tiles = expired_tiles_for_batch(
-                        self.pipe,
-                        self.state,
-                        new_state,
-                        frontier,
-                        max_zoom=self.expire_zoom,
-                        hint=hint,
-                    )
-                    tl = TileExpireList(max_zoom=self.expire_zoom)
-                    for r in tiles.collect():
-                        tl.tiles.setdefault(r["z"], set()).add((r["x"], r["y"]))
-                    tl.flush(self.expire_dir)
-                    return round(time.perf_counter() - t0, 3)
-
-                expire_pool = ThreadPoolExecutor(max_workers=1)
-                expire_future = expire_pool.submit(_expire)
-            t0 = time.perf_counter()
-            # per-table pins are independent jobs — overlap them (same
-            # concurrent-submission pattern as the import bench's sink writes)
-            with ThreadPoolExecutor(max_workers=8) as pool:
-                futs = {n: pool.submit(df.localCheckpoint) for n, df in new_tables.items()}
-                new_tables = {n: f.result() for n, f in futs.items()}
-            stage_secs["tables"] = round(time.perf_counter() - t0, 3)
-        finally:
-            # the expire pool must not leak (and its future must be
-            # awaited) even when a table pin raises mid-batch
-            # (round-10 ADVICE)
-            if expire_pool is not None:
-                if expire_future is not None:
-                    stage_secs["expire"] = expire_future.result()
-                expire_pool.shutdown()
-        if self.gens is not None:
-            # per-id gen refresh (T6) off the MATERIALIZED base tables
-            from imposm3_spark.pipeline.generalize import refresh_generalized_tables
-
-            t0 = time.perf_counter()
-            new_gens = refresh_generalized_tables(
-                self.pipe.mapping, self.gens, new_tables, affected
-            )
-            self.gens = {n: df.localCheckpoint() for n, df in new_gens.items()}
-            stage_secs["gens"] = round(time.perf_counter() - t0, 3)
-        self.state = new_state
-        self.tables = new_tables
+        stage_secs.update(batch.stage_secs)
+        self.state, self.tables, self.gens = batch.state, batch.tables, batch.gens
         if self.state_store is not None:
             # durable publish BEFORE the sequence checkpoint: a crash
             # between the two replays the batch onto the already-updated
             # state, which is idempotent (last-write-wins upsert)
             t0 = time.perf_counter()
-            self.state_store.save(new_state)
+            self.state_store.save(batch.state)
             self.state = self.state_store.load()
             stage_secs["store"] = round(time.perf_counter() - t0, 3)
         write_state_txt(self.state_file, seq)

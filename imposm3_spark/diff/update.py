@@ -14,11 +14,18 @@ Semantics ported:
 Spark shape: a batch is pure DataFrame algebra — anti-join + union for
 state, semi-joins for the frontier, the ImportPipeline for rebuild. Wrap
 `apply_batch` in foreachBatch for Structured Streaming; state tables would
-be Delta/parquet at scale (here: in-memory DataFrames, .persist()ed).
+be Delta/parquet at scale (here: local checkpoints, pinned per batch).
+
+`apply_batch` is the only batch body: the replication runner, the
+Structured Streaming replicator and the `diff` command all call it once
+per batch (reference: both `imposm diff` and `imposm run` feed
+importDiffFile).
 """
 
 from __future__ import annotations
 
+import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
@@ -36,9 +43,6 @@ class OsmState:
     nodes: DataFrame
     ways: DataFrame
     relations: DataFrame
-
-    def persist(self) -> "OsmState":
-        return OsmState(self.nodes.persist(), self.ways.persist(), self.relations.persist())
 
 
 def _last_change_per_id(changes: DataFrame, kind: str) -> DataFrame:
@@ -75,21 +79,15 @@ class Frontier:
     rel_ids: DataFrame
 
 
-def compute_frontier(
-    state: OsmState,
-    new_state: OsmState,
-    changes: DataFrame,
-    pin: bool = False,
-    hint: bool = True,
-) -> Frontier:
+def compute_frontier(state: OsmState, new_state: OsmState, changes: DataFrame) -> Frontier:
     """T3: changed ids + transitive dependents (2 hops max: node->way->rel).
 
     Dependencies are resolved against BOTH the old and new state: the old
     index catches ways/relations that referenced a now-deleted element; the
     new index catches references added by the batch.
 
-    pin=True localCheckpoints the three id sets (tiny — bounded by the
-    batch's blast radius). Everything downstream of a batch references the
+    The three id sets are localCheckpointed (tiny — bounded by the batch's
+    blast radius). Everything downstream of a batch references the
     frontier MANY times (3 rebuild semi-joins, ~7 delete anti-joins, 6
     expiry branches), and Spark re-executes a shared subtree once per
     referencing branch — unpinned, each reference re-pays the full
@@ -105,35 +103,26 @@ def compute_frontier(
         F.col("relation")["id"].alias("id")
     ).distinct()
 
-    if pin:
-        # pin each hop BEFORE the next consumes it, so the rel hop scans
-        # the state once against a materialized way frontier instead of
-        # embedding (and re-executing) the whole way-hop subtree
-        changed_nodes = changed_nodes.localCheckpoint()
+    # pin each hop BEFORE the next consumes it, so the rel hop scans the
+    # state once against a materialized way frontier instead of embedding
+    # (and re-executing) the whole way-hop subtree
+    changed_nodes = changed_nodes.localCheckpoint()
 
     dep_ways = _union_all(
         [
-            ri.dependent_ways(state.ways, changed_nodes, hint=hint),
-            ri.dependent_ways(new_state.ways, changed_nodes, hint=hint),
+            ri.dependent_ways(state.ways, changed_nodes),
+            ri.dependent_ways(new_state.ways, changed_nodes),
         ]
     ).distinct()
-    way_frontier = changed_ways.unionByName(dep_ways).distinct()
-    if pin:
-        way_frontier = way_frontier.localCheckpoint()
+    way_frontier = changed_ways.unionByName(dep_ways).distinct().localCheckpoint()
 
     dep_rels = _union_all(
         [
-            ri.dependent_relations(
-                state.relations, changed_nodes, way_frontier, hint=hint
-            ),
-            ri.dependent_relations(
-                new_state.relations, changed_nodes, way_frontier, hint=hint
-            ),
+            ri.dependent_relations(state.relations, changed_nodes, way_frontier),
+            ri.dependent_relations(new_state.relations, changed_nodes, way_frontier),
         ]
     ).distinct()
-    rel_frontier = changed_rels.unionByName(dep_rels).distinct()
-    if pin:
-        rel_frontier = rel_frontier.localCheckpoint()
+    rel_frontier = changed_rels.unionByName(dep_rels).distinct().localCheckpoint()
     return Frontier(node_ids=changed_nodes, way_ids=way_frontier, rel_ids=rel_frontier)
 
 
@@ -178,7 +167,7 @@ def rebuild_tables(
     # shuffled the ENTIRE relations state (with its members arrays) per
     # batch — round-10 probe caught it; the id set is blast-radius-sized
     # like every other frontier side here
-    # hint=False (count-gated by the runner, round-10 ADVICE): a catch-up
+    # hint=False (count-gated by apply_batch, round-10 ADVICE): a catch-up
     # batch's frontier can exceed broadcastable size — the unhinted joins
     # degrade to sort-merge gracefully instead of OOMing the driver.
     maybe_bcast = (lambda d: F.broadcast(d)) if hint else (lambda d: d)
@@ -222,13 +211,11 @@ def rebuild_tables(
     # each contains lazy pins whose non-final stages AQE materializes AT
     # CONSTRUCTION — built serially, those stage chains run one builder at
     # a time. Constructing them from a small pool overlaps the chains
-    # (guide §2.6 — the same concurrent-submission pattern as the runner's
+    # (the same concurrent-submission pattern as apply_batch's
     # state pins): probe at 32 replicas/500 changes measured the parts
     # wall 12-16 s serial vs ~10 s threaded. pipe._expr races at worst
     # rebuild an identical Column tree (last write wins — all values
     # equal); part ORDER stays deterministic via the futures list.
-    from concurrent.futures import ThreadPoolExecutor
-
     builders = (
         lambda: pipe.relation_member_tables(rels, needed_ways, needed_nodes),
         lambda: pipe.relation_tables(rels, needed_ways, coords),
@@ -400,7 +387,7 @@ def expired_tiles_for_batch(
         }
         pipe._expire_match_exprs = exprs
 
-    # hint=False (count-gated by the runner, round-10 ADVICE): catch-up
+    # hint=False (count-gated by apply_batch, round-10 ADVICE): catch-up
     # batches degrade to sort-merge instead of forcing a broadcast
     maybe_bcast = (lambda d: F.broadcast(d)) if hint else (lambda d: d)
     parts = []
@@ -491,42 +478,101 @@ def expired_tiles_for_batch(
     return expired_tiles(geoms, max_zoom=max_zoom)
 
 
+# Broadcast-hint gate (round-10 ADVICE): a batch of more than DIFF_GATE
+# changes counts its pinned frontier sets, and if any could exceed
+# BROADCAST_LIMIT ids (~32 MB) every frontier-side broadcast hint is dropped.
+DIFF_GATE = 100_000
+BROADCAST_LIMIT = 4_000_000
+
+
+@dataclass
+class Batch:
+    """Result of one apply_batch: the pinned element state, output tables
+    and generalized tables after the batch, and per-stage walls."""
+
+    state: OsmState
+    tables: dict[str, DataFrame]
+    gens: dict[str, DataFrame] | None
+    stage_secs: dict[str, float]
+
+
 def apply_batch(
     pipe: ImportPipeline,
     state: OsmState,
     tables: dict[str, DataFrame],
     changes: DataFrame,
-    with_affected: bool = False,
-    new_state: OsmState | None = None,
-    frontier: Frontier | None = None,
-    hint: bool = True,
-):
-    """One diff batch end-to-end: state upsert, frontier, delete+rebuild.
+    *,
+    gens: dict[str, DataFrame] | None = None,
+    expire_dir: str | None = None,
+    expire_zoom: int = 14,
+) -> Batch:
+    """One diff batch end-to-end: state upsert, frontier, delete+rebuild,
+    tile expiry (when expire_dir is set) and the per-id refresh of the
+    generalized tables (when gens is given).
 
-    Returns (new_state, new_tables); with_affected=True additionally
-    returns the per-table-type affected osm_id sets, which feed the
-    per-id generalized-table refresh (generalize.refresh_generalized_
-    tables) — call that AFTER materializing new_tables (checkpoint /
-    sink write), otherwise the gen lineage re-executes the whole rebuild
-    per gen table.
+    The batch pins with localCheckpoint: the element state, the frontier,
+    the output tables and the gens. Local checkpoints are
+    NOT fault tolerant — their blocks live on the executors that computed
+    them, so a lost executor fails the next batch instead of recomputing
+    the lineage. They also cut the lineage, so the returned frames no
+    longer read the inputs (the `diff` command relies on this to overwrite
+    its input parquet).
+
+    stage_secs holds the wall of each stage, keyed where the lazy batch
+    plan actually executes: state, frontier, rebuild (plan construction
+    plus the rebuild's shared-frontier pins), tables, expire (only with
+    expire_dir) and gens (only with gens).
 
     The delete+insert pair per table is exactly the reference's sync-tx
     mode (database/postgis/tx.go:116-199); against a real PostGIS sink
     this maps to DELETE WHERE osm_id IN (...) followed by batched INSERTs
     inside one transaction (see sinks/postgis.py)."""
-    if new_state is None:
-        new_state = apply_changes_to_state(state, changes)
-    if frontier is None:
-        # pinned by default: the frontier is referenced by the 3 rebuild
-        # semi-joins AND every table's delete anti-join below — unpinned,
-        # each reference re-executes the reverse-reference scans (see
-        # compute_frontier docstring). Callers that already hold a pinned
-        # frontier (diff/runner, streaming/replication) pass it in so the
-        # batch computes it exactly once.
-        frontier = compute_frontier(state, new_state, changes, pin=True, hint=hint)
+    stage_secs: dict[str, float] = {}
+
+    # Pin the upserted state and the frontier FIRST: every downstream
+    # consumer (rebuild semi-joins, delete anti-joins, expiry branches, gen
+    # refresh) references them several times, and Spark re-executes an
+    # unpinned subtree once per referencing branch. Pinning here (tiny
+    # jobs — the upsert is an anti-join+union over the already-pinned
+    # previous state; the frontier is the batch's blast radius) turned
+    # round-10 benchdiff's per-batch wall from ~190 s to single-digit
+    # seconds at 32 Monaco replicas.
+    t0 = time.perf_counter()
+    new_state = apply_changes_to_state(state, changes)
+    # the three state pins are independent — submit them concurrently
+    # (each is a small job; serial submission pays three scheduler
+    # round-trips where one suffices on an idle cluster)
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        n_f, w_f, r_f = (
+            pool.submit(new_state.nodes.localCheckpoint),
+            pool.submit(new_state.ways.localCheckpoint),
+            pool.submit(new_state.relations.localCheckpoint),
+        )
+        new_state = OsmState(n_f.result(), w_f.result(), r_f.result())
+    stage_secs["state"] = round(time.perf_counter() - t0, 3)
+
+    t0 = time.perf_counter()
+    frontier = compute_frontier(state, new_state, changes)
+    # The frontier-side hints assume a blast-radius-bounded batch, but
+    # batch size is input-controlled (catch-up replication, mass edits).
+    # Normal batches pay NOTHING here (changes is a driver-side
+    # LocalRelation — count() is no job); a catch-up-sized batch pays three
+    # tiny count jobs on the pinned frontier and, if any side could exceed
+    # the broadcastable bound, drops every hint so the joins degrade to
+    # sort-merge instead of OOMing the driver. Residual: a pathological
+    # fan-out from FEW changes is not gated — it is bounded by the state's
+    # max ways-per-node fan-in.
+    hint = True
+    if changes.count() > DIFF_GATE:
+        hint = all(
+            df.count() <= BROADCAST_LIMIT
+            for df in (frontier.node_ids, frontier.way_ids, frontier.rel_ids)
+        )
+    stage_secs["frontier"] = round(time.perf_counter() - t0, 3)
+
+    t0 = time.perf_counter()
     rebuilt = rebuild_tables(pipe, new_state, frontier, hint=hint)
     delete_ids = affected_osm_ids(pipe, frontier)
-
     new_tables: dict[str, DataFrame] = {}
     for name, df in tables.items():
         table_type = pipe.mapping.tables[name].type
@@ -534,7 +580,7 @@ def apply_batch(
         # broadcast: dels is the frontier's mangled-id set (blast-radius
         # bounded) read from checkpointed RDDs with no stats — unhinted,
         # the anti join sort-merges, i.e. shuffles the ENTIRE output table
-        # per batch (round-10 probe class; guide §3.1)
+        # per batch (round-10 probe class)
         kept = (
             df.join(F.broadcast(dels) if hint else dels, "osm_id", "left_anti")
             if dels is not None
@@ -546,6 +592,53 @@ def apply_batch(
     for name, df in rebuilt.items():
         if name not in new_tables:
             new_tables[name] = df
-    if with_affected:
-        return new_state, new_tables, delete_ids
-    return new_state, new_tables
+    stage_secs["rebuild"] = round(time.perf_counter() - t0, 3)
+
+    expire_future = None
+    expire_pool = None
+    try:
+        if expire_dir is not None:
+            # expiry depends only on (state, new_state, frontier) — all
+            # pinned above — so it runs CONCURRENTLY with the table pins
+            # below; its wall is still recorded separately
+            def _expire() -> float:
+                from imposm3_spark.expire.tiles import TileExpireList
+
+                t0 = time.perf_counter()
+                tiles = expired_tiles_for_batch(
+                    pipe, state, new_state, frontier, max_zoom=expire_zoom, hint=hint
+                )
+                tl = TileExpireList(max_zoom=expire_zoom)
+                for r in tiles.collect():
+                    tl.tiles.setdefault(r["z"], set()).add((r["x"], r["y"]))
+                tl.flush(expire_dir)
+                return round(time.perf_counter() - t0, 3)
+
+            expire_pool = ThreadPoolExecutor(max_workers=1)
+            expire_future = expire_pool.submit(_expire)
+        t0 = time.perf_counter()
+        # per-table pins are independent jobs — overlap them (same
+        # concurrent-submission pattern as the import bench's sink writes)
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futs = {n: pool.submit(df.localCheckpoint) for n, df in new_tables.items()}
+            new_tables = {n: f.result() for n, f in futs.items()}
+        stage_secs["tables"] = round(time.perf_counter() - t0, 3)
+    finally:
+        # the expire pool must not leak (and its future must be awaited)
+        # even when a table pin raises mid-batch (round-10 ADVICE)
+        if expire_pool is not None:
+            if expire_future is not None:
+                stage_secs["expire"] = expire_future.result()
+            expire_pool.shutdown()
+
+    if gens is not None:
+        # per-id gen refresh (T6) off the MATERIALIZED base tables — from
+        # unpinned tables the gen lineage would re-execute the whole
+        # rebuild per gen table
+        from imposm3_spark.pipeline.generalize import refresh_generalized_tables
+
+        t0 = time.perf_counter()
+        new_gens = refresh_generalized_tables(pipe.mapping, gens, new_tables, delete_ids)
+        gens = {n: df.localCheckpoint() for n, df in new_gens.items()}
+        stage_secs["gens"] = round(time.perf_counter() - t0, 3)
+    return Batch(new_state, new_tables, gens, stage_secs)

@@ -10,9 +10,9 @@ Shape:
 - `readStream.format("text").option("wholetext", true)` turns each
   `.osc` file into ONE row (OSC is a document format, not line-delimited;
   minutely change files are KB-MB sized, so a whole-file row is cheap);
-- `foreachBatch` applies the SAME `apply_batch` DataFrame algebra as the
-  batch diff path (T2-T6) — one transactional micro-batch over all files
-  discovered this trigger, which is exactly the reference's
+- `foreachBatch` calls the SAME `apply_batch` as the replication runner
+  and the `diff` command (T2-T7) — one transactional micro-batch over all
+  files discovered this trigger, which is exactly the reference's
   `-commit-latest` mode (multiple sequence files in one commit,
   update/cmd.go:81-164);
 - files within a batch are applied in filename order (sequence numbers
@@ -33,7 +33,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from imposm3_spark.diff.update import OsmState, apply_batch, compute_frontier
+from imposm3_spark.diff.update import OsmState, apply_batch
 from imposm3_spark.pipeline.engine import ImportPipeline
 from imposm3_spark.sources.osm_xml import CHANGE_SCHEMA, parse_osc_rows
 
@@ -56,46 +56,15 @@ class StreamingReplicator:
         if not rows:
             return
         changes = self.spark.createDataFrame(rows, CHANGE_SCHEMA)
-        # pin state + frontier once, then every downstream consumer
-        # (rebuild/delete/expiry/gens) reads the materialized sets — same
-        # shape as diff/runner.apply_one (see its comment for the why)
-        from imposm3_spark.diff.update import apply_changes_to_state
-
-        new_state = apply_changes_to_state(self.state, changes)
-        new_state = OsmState(
-            new_state.nodes.localCheckpoint(),
-            new_state.ways.localCheckpoint(),
-            new_state.relations.localCheckpoint(),
-        )
-        frontier = compute_frontier(self.state, new_state, changes, pin=True)
-        _, new_tables, affected = apply_batch(
+        batch = apply_batch(
             self.pipe,
             self.state,
             self.tables,
             changes,
-            with_affected=True,
-            new_state=new_state,
-            frontier=frontier,
+            gens=self.gens,
+            expire_dir=self.expire_dir,
         )
-        if self.expire_dir is not None:
-            from imposm3_spark.diff.update import expired_tiles_for_batch
-            from imposm3_spark.expire.tiles import TileExpireList
-
-            tiles = expired_tiles_for_batch(self.pipe, self.state, new_state, frontier)
-            tl = TileExpireList(max_zoom=14)
-            for r in tiles.collect():
-                tl.tiles.setdefault(r["z"], set()).add((r["x"], r["y"]))
-            tl.flush(self.expire_dir)
-        new_tables = {n: df.localCheckpoint() for n, df in new_tables.items()}
-        if self.gens is not None:
-            from imposm3_spark.pipeline.generalize import refresh_generalized_tables
-
-            new_gens = refresh_generalized_tables(
-                self.pipe.mapping, self.gens, new_tables, affected
-            )
-            self.gens = {n: df.localCheckpoint() for n, df in new_gens.items()}
-        self.state = new_state
-        self.tables = new_tables
+        self.state, self.tables, self.gens = batch.state, batch.tables, batch.gens
         self.batches_applied += 1
 
     def _process_batch(self, batch_df: DataFrame, _batch_id: int) -> None:

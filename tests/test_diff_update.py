@@ -39,16 +39,10 @@ def updated(spark):
 
     state = OsmState(nodes, ways, relations)
     changes = read_osc_xml(spark, CHANGES)
-    new_state, new_tables, affected = apply_batch(
-        pipe, state, tables, changes, with_affected=True
-    )
+    batch = apply_batch(pipe, state, tables, changes, gens=gens0)
     needed = {"roads", "landusages", "waterareas", "places", "buildings", "barrierpoints"}
-    out = {n: df.localCheckpoint() for n, df in new_tables.items() if n in needed}
-
-    from imposm3_spark.pipeline.generalize import refresh_generalized_tables
-
-    new_gens = refresh_generalized_tables(mapping, gens0, out, affected)
-    out.update({n: df.localCheckpoint() for n, df in new_gens.items() if n in gen_needed})
+    out = {n: df for n, df in batch.tables.items() if n in needed}
+    out.update({n: df for n, df in batch.gens.items() if n in gen_needed})
     return out
 
 

@@ -10,6 +10,7 @@ import http.server
 import shutil
 import threading
 import urllib.error
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +21,8 @@ from imposm3_spark.diff.update import OsmState
 from imposm3_spark.mapping.config import load_mapping
 from imposm3_spark.pipeline.engine import ImportPipeline
 from imposm3_spark.sources.osm_xml import read_osm_xml
+
+FIX = Path(__file__).parent / "fixtures" / "osm"
 
 
 def test_seq_path_layout():
@@ -133,15 +136,14 @@ def test_runner_drains_remote_endpoint(spark, tmp_path, http_remote):
     not have from the HTTP feed, applies them through the normal green
     apply path, and checkpoints exactly-once."""
     remote, url = http_remote
-    with open("/root/reference/test/route_relation.osc", "rb") as f:
-        osc = f.read()
+    osc = (FIX / "route_relation.osc").read_bytes()
     p = remote / "000/000/001.osc.gz"
     p.parent.mkdir(parents=True)
     p.write_bytes(gzip.compress(osc))
     write_state_txt(remote / "000/000/001.state.txt", 1)
 
-    mapping = load_mapping("/root/reference/test/route_relation_mapping.yml")
-    nodes, ways, rels = read_osm_xml(spark, "/root/reference/test/route_relation.osm")
+    mapping = load_mapping(str(FIX / "route_relation_mapping.yml"))
+    nodes, ways, rels = read_osm_xml(spark, str(FIX / "route_relation.osm"))
     pipe = ImportPipeline(mapping, srid=3857)
     tables = {n: df.localCheckpoint() for n, df in pipe.run(nodes, ways, rels).items()}
 

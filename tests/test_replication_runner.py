@@ -2,6 +2,7 @@
 survives restarts (update/cmd.go semantics)."""
 
 import shutil
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +17,8 @@ from imposm3_spark.diff.update import OsmState
 from imposm3_spark.mapping.config import load_mapping
 from imposm3_spark.pipeline.engine import ImportPipeline
 from imposm3_spark.sources.osm_xml import read_osm_xml
+
+FIX = Path(__file__).parent / "fixtures" / "osm"
 
 
 def test_state_txt_roundtrip(tmp_path):
@@ -37,11 +40,11 @@ def test_sequence_path_layouts(tmp_path):
 @pytest.fixture(scope="module")
 def runner_setup(spark, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("repl")
-    mapping = load_mapping("/root/reference/test/route_relation_mapping.yml")
-    nodes, ways, rels = read_osm_xml(spark, "/root/reference/test/route_relation.osm")
+    mapping = load_mapping(str(FIX / "route_relation_mapping.yml"))
+    nodes, ways, rels = read_osm_xml(spark, str(FIX / "route_relation.osm"))
     pipe = ImportPipeline(mapping, srid=3857)
     tables = {n: df.localCheckpoint() for n, df in pipe.run(nodes, ways, rels).items()}
-    shutil.copy("/root/reference/test/route_relation.osc", tmp / "1.osc")
+    shutil.copy(FIX / "route_relation.osc", tmp / "1.osc")
     return spark, pipe, OsmState(nodes, ways, rels), tables, tmp
 
 
@@ -60,7 +63,8 @@ def test_runner_applies_and_checkpoints(runner_setup):
     assert applied == 1
     assert runner.current_sequence() == 1
 
-    # the diff landed: member name updated (route_relation_test.go:135-141)
+    # the diff landed: member name updated (route_relation_test.go:135-141
+    # MemberGeomUpdated2)
     rows = (
         runner.tables["route_members"]
         .filter((F.col("osm_id") == -100902) & (F.col("member") == 100503))

@@ -34,8 +34,8 @@ def single(spark):
     tables = {n: df.localCheckpoint() for n, df in pipe.run(nodes, ways, relations).items()}
 
     changes = read_osc_xml(spark, "/root/reference/test/single_table.osc")
-    _, updated = apply_batch(pipe, OsmState(nodes, ways, relations), tables, changes)
-    return tables, {n: df.localCheckpoint() for n, df in updated.items()}
+    batch = apply_batch(pipe, OsmState(nodes, ways, relations), tables, changes)
+    return tables, batch.tables
 
 
 def rows_of(t, osm_id):

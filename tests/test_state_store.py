@@ -2,6 +2,8 @@
 scale contract — joins against the bucketed side plan WITHOUT an Exchange
 on the state side."""
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -9,7 +11,8 @@ from imposm3_spark.diff.state_store import BucketedStateStore
 from imposm3_spark.diff.update import OsmState
 from imposm3_spark.sources.osm_xml import read_osm_xml
 
-OSM = "/root/reference/test/route_relation.osm"
+FIX = Path(__file__).parent / "fixtures" / "osm"
+OSM = str(FIX / "route_relation.osm")
 
 
 @pytest.fixture()
@@ -47,7 +50,8 @@ def test_bucketed_join_no_state_side_exchange(spark, state, tmp_path):
     store = BucketedStateStore(spark, str(tmp_path / "st"), buckets=4)
     store.save(state)
     loaded = store.load()
-    ids = spark.range(100).select(F.col("id"))
+    # the fixture's node ids are 100101-100109
+    ids = spark.range(100100, 100200).select(F.col("id"))
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -57,7 +61,8 @@ def test_bucketed_join_no_state_side_exchange(spark, state, tmp_path):
         # state side is scanned pre-partitioned on id
         assert plan.count("Exchange hashpartitioning") == 1, plan
         # and the result is still correct
-        assert joined.count() == state.nodes.filter(F.col("id") < 100).count()
+        want = state.nodes.filter(F.col("id").between(100100, 100199)).count()
+        assert want > 0 and joined.count() == want
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
@@ -77,14 +82,14 @@ def test_runner_with_durable_state(spark, tmp_path):
     from imposm3_spark.mapping.config import load_mapping
     from imposm3_spark.pipeline.engine import ImportPipeline
 
-    mapping = load_mapping("/root/reference/test/route_relation_mapping.yml")
+    mapping = load_mapping(str(FIX / "route_relation_mapping.yml"))
     nodes, ways, rels = read_osm_xml(spark, OSM)
     pipe = ImportPipeline(mapping, srid=3857)
     tables = {n: df.localCheckpoint() for n, df in pipe.run(nodes, ways, rels).items()}
 
     diff_dir = tmp_path / "diffs"
     diff_dir.mkdir()
-    shutil.copy("/root/reference/test/route_relation.osc", diff_dir / "1.osc")
+    shutil.copy(FIX / "route_relation.osc", diff_dir / "1.osc")
     store = BucketedStateStore(spark, str(tmp_path / "st"), buckets=4)
     runner = ReplicationRunner(
         spark=spark,

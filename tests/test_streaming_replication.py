@@ -2,7 +2,7 @@
 applies them exactly once (checkpointed), output tables update live."""
 
 import shutil
-import time
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,9 +13,10 @@ from imposm3_spark.pipeline.engine import ImportPipeline
 from imposm3_spark.sources.osm_xml import read_osm_xml
 from imposm3_spark.streaming import StreamingReplicator
 
-OSM = "/root/reference/test/route_relation.osm"
-OSC = "/root/reference/test/route_relation.osc"
-MAPPING = "/root/reference/test/route_relation_mapping.yml"
+FIX = Path(__file__).parent / "fixtures" / "osm"
+OSM = str(FIX / "route_relation.osm")
+OSC = str(FIX / "route_relation.osc")
+MAPPING = str(FIX / "route_relation_mapping.yml")
 
 
 @pytest.fixture()
@@ -39,7 +40,8 @@ def _drain(repl, landing, ckpt):
 
 def test_stream_applies_osc(setup):
     spark, pipe, state, tables, landing, ckpt = setup
-    # route_relation.osc moves node 120001 (member of route relation 100901)
+    # route_relation.osc moves stop 100103, renames way 100503 and drops
+    # way 100512 from route relation 100902
     shutil.copy(OSC, landing / "000000001.osc")
     repl = StreamingReplicator(
         spark=spark, pipe=pipe, state=state, tables=dict(tables)
